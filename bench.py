@@ -261,7 +261,7 @@ def _group_counters(sc, group: str) -> dict[str, object]:
     plan change moves and host load cannot — job/stage counts and
     shuffle/input bytes). Job ids come from the public StatusTracker;
     per-stage bytes from the JVM AppStatusStore (the same guarded
-    private-reach discipline as models/common.release_checkpoint — any
+    private-reach discipline as registry.release_checkpoint — any
     failure returns a partial/empty dict, never breaks the bench)."""
     out: dict[str, object] = {}
     try:
@@ -300,23 +300,6 @@ def _group_counters(sc, group: str) -> dict[str, object]:
     except Exception:
         pass
     return out
-
-
-def _drain_query_checkpoints() -> None:
-    """Release the per-query diamond-junction localCheckpoints after a
-    query's action completes (ADVICE r08: un-released checkpoint blocks
-    accumulate across a long bench/sweep session — the same storage
-    pressure the pagerank leak fix removed from the iterative loops).
-    Guarded: a tree without the tracked-checkpoint registry still
-    benches."""
-    try:
-        from dask_recommender_system_spark.models.common import (
-            release_query_checkpoints,
-        )
-
-        release_query_checkpoints()
-    except Exception:
-        pass
 
 
 def _planted_holdout_rmse(spark) -> dict[str, float]:
@@ -437,9 +420,6 @@ def main() -> None:
             # queries that persist() intermediates must not bill the next
             # run/query for their executor-memory footprint
             spark.catalog.clearCache()
-            # ... and the per-query junction checkpoints must not pile up
-            # executor storage blocks across the 125-query session
-            _drain_query_checkpoints()
             if run_i == q_runs - 1:
                 counters[name] = _group_counters(sc, group)
         runs.sort()
@@ -471,7 +451,6 @@ def main() -> None:
             runs.append(time.perf_counter() - t0)
             sc.setJobGroup("bench:hygiene", "cache/checkpoint hygiene")
             spark.catalog.clearCache()
-            _drain_query_checkpoints()
             if run_i == n_runs - 1:
                 counters[f"{name}_noop"] = _group_counters(sc, group)
         runs.sort()

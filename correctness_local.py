@@ -71,14 +71,6 @@ def main() -> None:
             rec["err"] = traceback.format_exc(limit=3)
         results[name] = rec
         spark.catalog.clearCache()
-        # free the per-query junction checkpoints (ADVICE r08: otherwise a
-        # 422-query sweep accumulates storage blocks and late queries run
-        # 2-5x their early-session time)
-        from dask_recommender_system_spark.models.common import (
-            release_query_checkpoints,
-        )
-
-        release_query_checkpoints()
         status = (
             "PASS"
             if rec["hash_match"]

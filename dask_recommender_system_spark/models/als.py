@@ -18,7 +18,7 @@ from __future__ import annotations
 import time
 
 from .base import _SGDRecommenderBase
-from .common import checkpoint, release_checkpoint
+from ..registry import checkpoint, release_checkpoint
 
 
 class ALS(_SGDRecommenderBase):
@@ -35,19 +35,8 @@ class ALS(_SGDRecommenderBase):
         # rating per materialization.
         q_cols = [f"q_{j}" for j in range(self.k)]
         p_cols = [f"p_{j}" for j in range(self.k)]
-        # slim error caches while the factor side of the respective
-        # re-attach join fits the broadcast threshold (see the funk_svd
-        # loop comment — bit-identical values, ~10x fewer cached bytes,
-        # wide fallback past the threshold). The epoch-start error
-        # re-attaches ITEM factors (q_j) for the user gradient; the
-        # mid-epoch error re-attaches USER factors (p_j) for the item
-        # gradient — independent size checks.
-        slim_q = self._dim_fits(r_enc, self.stats.n_items)
-        slim_p = self._dim_fits(r_enc, self.stats.n_users)
-        q_cache = ["i_idx"] if slim_q else q_cols
-        p_cache = ["u_idx"] if slim_p else p_cols
 
-        err = self._error_df(r_enc, u, i).select("u_idx", "err", *q_cache).persist()
+        err = self._error_df(r_enc, u, i).select("u_idx", "err", *q_cols).persist()
         if not collect_errors:
             # materialize for real size statistics (see funk_svd.py epoch
             # loop); with collect_errors the metrics aggregate below is
@@ -58,30 +47,25 @@ class ALS(_SGDRecommenderBase):
             if collect_errors:
                 self._collect_metrics(err)
 
-            # user side from the epoch-start error (stale q columns —
-            # re-attached from the stale item checkpoint when slim)
-            err_for_u = err.join(self._q_view(i), "i_idx") if slim_q else err
-            u_new = checkpoint(self._update_users(err_for_u, u))
+            # user side from the epoch-start error (stale q columns in err)
+            u_new = checkpoint(self._update_users(err, u))
 
             # fresh error with updated users (models/als.py:170)
             err2 = (
-                self._error_df(r_enc, u_new, i).select("i_idx", "err", *p_cache).persist()
+                self._error_df(r_enc, u_new, i).select("i_idx", "err", *p_cols).persist()
             )
             err2.count()
             err.unpersist()
 
             # item side from the fresh error — its p_j columns ARE the
             # updated user factors (models/als.py:171-173)
-            err2_for_i = (
-                err2.join(self._p_view(u_new), "u_idx") if slim_p else err2
-            )
-            i_new = checkpoint(self._update_items(err2_for_i, i))
+            i_new = checkpoint(self._update_items(err2, i))
 
             # fresh error again → next epoch's start (models/als.py:174).
             # Nothing consumes the FINAL epoch's end error (metrics are
             # pre-update; fit returns factors only), so leave it lazy then
             # — persist() alone schedules no job.
-            err = self._error_df(r_enc, u_new, i_new).select("u_idx", "err", *q_cache).persist()
+            err = self._error_df(r_enc, u_new, i_new).select("u_idx", "err", *q_cols).persist()
             if not collect_errors and epoch < self.epochs - 1:
                 err.count()
             err2.unpersist()

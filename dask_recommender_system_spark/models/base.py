@@ -28,14 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..registry import checkpoint
 from .common import (
     CorpusStats,
     broadcast_if_fits,
-    checkpoint,
     corpus_stats,
     dot_wide,
     encode_column,
-    fits_broadcast,
     init_params,
     metrics_row,
 )
@@ -157,47 +156,9 @@ class _SGDRecommenderBase:
         must never broadcast) the frame is returned unhinted and the
         planner/AQE keeps the shuffle strategy — the hint is
         scale-adaptive, not a local[32] constant."""
-        return broadcast_if_fits(df, n_rows * (self.k + 2) * 8, n_rows=n_rows)
-
-    def _dim_fits(self, df_or_spark, n_rows: int) -> bool:
-        """True when a factor frame of ``n_rows`` would get the ``_dim``
-        broadcast hint — the same driver-known estimate, exposed so the
-        epoch loops can choose the slim error-cache layout (cache only
-        (u_idx, i_idx, err) and re-attach the factor columns through the
-        broadcast) exactly when the re-attach join is broadcast-cheap.
-        Past the threshold the loops keep the wide cache: at that scale
-        the re-attach would be a data-sized shuffle, strictly worse than
-        caching the columns."""
-        spark = getattr(df_or_spark, "sparkSession", df_or_spark)
-        return fits_broadcast(spark, n_rows * (self.k + 2) * 8, n_rows=n_rows)
+        return broadcast_if_fits(df, n_rows * (self.k + 2) * 8)
 
     # ------------------------------------------------------------ epoch ops
-
-    def _q_view(self, i: DataFrame) -> DataFrame:
-        """(i_idx, q_0..q_{k-1}) re-attach view of the item factors,
-        broadcast-hinted under the same driver-known size check as every
-        other dimension join. Used by the slim error-cache path: joining
-        this onto a cached (u_idx, i_idx, err) frame reproduces the
-        exact q_j doubles the wide cache would have carried (same
-        checkpointed factor values, same row order — the broadcast probe
-        is order-preserving — so the gradient partial sums are
-        bit-identical)."""
-        return self._dim(
-            i.select(
-                "i_idx", *[F.col(f"f_{j}").alias(f"q_{j}") for j in range(self.k)]
-            ),
-            self.stats.n_items,
-        )
-
-    def _p_view(self, u: DataFrame) -> DataFrame:
-        """(u_idx, p_0..p_{k-1}) re-attach view of the user factors —
-        the user-side twin of ``_q_view``."""
-        return self._dim(
-            u.select(
-                "u_idx", *[F.col(f"f_{j}").alias(f"p_{j}") for j in range(self.k)]
-            ),
-            self.stats.n_users,
-        )
 
     def _error_df(self, r_enc: DataFrame, u: DataFrame, i: DataFrame) -> DataFrame:
         """err = rating − (μ + bu + bi + P·Q) on observed rows only — the

@@ -17,6 +17,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..registry import checkpoint
+
 
 def encode_sorted_rank(
     keys: DataFrame, col: str, idx_name: str, num_parts: int | None = None
@@ -25,7 +27,7 @@ def encode_sorted_rank(
     single-partition window — the two-pass block-offset scheme:
 
     1. range-partition the distinct keys on value (partition order = value
-       order) and pin the partitioning with an eager localCheckpoint so
+       order) and pin the partitioning with an eager checkpoint so
        every downstream job sees identical blocks;
     2. per-partition local rank via a window PARTITIONED by partition id
        (each task ranks only its own block — parallel, bounded);
@@ -44,7 +46,7 @@ def encode_sorted_rank(
     distinct = keys.select(col).distinct()
     # explicit num_parts: AQE never coalesces a user-specified repartition,
     # and the checkpoint pins block identity across the two passes
-    ranked = distinct.repartitionByRange(p, col).localCheckpoint(eager=True)
+    ranked = checkpoint(distinct.repartitionByRange(p, col))
     tagged = ranked.withColumn("_pid", F.spark_partition_id())
     counts = tagged.groupBy("_pid").count().collect()
     offsets, acc = [], 0
@@ -76,7 +78,7 @@ def exact_quantiles_cont(
     ``encode_sorted_rank`` applied to the full multiset:
 
     1. range-partition the values (partition order = value order), pin
-       block identity with an eager localCheckpoint;
+       block identity with an eager checkpoint;
     2. O(num_partitions) count collect → cumulative offsets;
     3. global rank = offset[pid] + per-block row_number (window is
        PARTITIONED by block — no single-partition sort anywhere);
@@ -91,10 +93,8 @@ def exact_quantiles_cont(
 
     spark = df.sparkSession
     p = num_parts or spark.sparkContext.defaultParallelism
-    blocked = (
-        df.select(F.col(col).alias("_v"))
-        .repartitionByRange(p, "_v")
-        .localCheckpoint(eager=True)
+    blocked = checkpoint(
+        df.select(F.col(col).alias("_v")).repartitionByRange(p, "_v")
     )
     tagged = blocked.withColumn("_pid", F.spark_partition_id())
     counts = tagged.groupBy("_pid").count().collect()
@@ -240,84 +240,3 @@ def broadcast_if_fits(df: DataFrame, est_bytes: int) -> DataFrame:
     if 0 < est_bytes <= thr:
         return F.broadcast(df)
     return df
-
-
-def checkpoint(df: DataFrame) -> DataFrame:
-    """Truncate lineage between epochs (SURVEY.md §4.3 — the one hard
-    physical-execution problem). localCheckpoint materializes to executor
-    storage and cuts the logical plan, so epoch N's plan depth is O(1), not
-    O(N). On a real cluster with flaky executors, prefer
-    ``spark.sparkContext.setCheckpointDir`` + ``df.checkpoint()`` (reliable
-    storage) every ~10 epochs, like MLlib ALS's checkpointInterval."""
-    return df.localCheckpoint(eager=True)
-
-
-def release_checkpoint(df: DataFrame) -> None:
-    """Free a SUPERSEDED localCheckpoint's storage blocks immediately.
-
-    ``df.unpersist()`` is a no-op here — checkpoint blocks are RDD-level
-    storage, not CacheManager entries — so without this, epoch loops
-    accumulate 2 checkpointed RDDs per epoch until executor storage
-    pressure sets in; measured on a fresh local[32] session: flat
-    3.2 s/epoch through epoch ~15, then 4.7 → 7.0 → 12.8 → 27.7 → 71 →
-    173 s (x2+ per epoch) once the pile crosses the storage threshold.
-    Deterministic release keeps storage O(1) in epoch count and epoch
-    time flat at ANY epoch count. Reaches the checkpointed RDD through
-    the LogicalRDD root of the analyzed plan; silently no-ops for
-    non-checkpointed frames (e.g. parity tests inject raw init factors).
-    CAUTION: only call once nothing references the frame — a released
-    local checkpoint cannot be recomputed.
-
-    This reaches through private JVM internals (queryExecution/analyzed/
-    rdd), so a Spark upgrade that reshapes the analyzed plan would turn
-    the release into a silent no-op and reintroduce the 2-RDDs/epoch
-    blowup. Guards (ADVICE r05): successful releases are counted in
-    ``RELEASE_STATS`` so a no-op regression is observable, and
-    tests/test_model_metrics.py::test_epoch_loop_resource_discipline
-    asserts storage stays O(1) across epochs on every CI run."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        RELEASE_STATS["released"] += 1
-    except Exception:
-        RELEASE_STATS["failed"] += 1
-
-
-#: observability for release_checkpoint (ADVICE r05): epoch loops can
-#: assert released > 0 after a fit; a Spark upgrade that breaks the
-#: private-API reach shows up as failed > 0 instead of silent leakage.
-RELEASE_STATS: dict[str, int] = {"released": 0, "failed": 0}
-
-
-#: per-query localCheckpoints whose blocks become dead once the query's
-#: action completes (ADVICE r08: the diamond-junction checkpoints that
-#: feed RETURNED plans — triangle e/o, SNM rk/cand, doc_similarity wn,
-#: encode_sorted_rank's block pin — cannot be released inside the
-#: operator, because the caller has not run the plan yet; un-released
-#: they accumulate executor storage across a 125-query bench or a
-#: 422-query sweep, the same pressure the pagerank leak fix removed).
-#: Operators register them via tracked_checkpoint; harnesses (bench.py,
-#: tools/profile_queries.py, correctness sweeps) call
-#: release_query_checkpoints() AFTER each query's action completes.
-QUERY_CHECKPOINTS: list[DataFrame] = []
-
-
-def tracked_checkpoint(df: DataFrame) -> DataFrame:
-    """localCheckpoint(eager) + register the result for harness-side
-    release once the consuming query's action has completed. ONLY for
-    checkpoints that feed the query's returned plan — a released local
-    checkpoint cannot be recomputed, so callers that re-run the same
-    DataFrame must call the query fn again (every harness here does)."""
-    out = df.localCheckpoint(eager=True)
-    QUERY_CHECKPOINTS.append(out)
-    return out
-
-
-def release_query_checkpoints() -> int:
-    """Free every tracked per-query checkpoint's storage blocks; returns
-    how many were released. Safe to call between queries in any harness;
-    a no-op when nothing was tracked."""
-    n = 0
-    while QUERY_CHECKPOINTS:
-        release_checkpoint(QUERY_CHECKPOINTS.pop())
-        n += 1
-    return n

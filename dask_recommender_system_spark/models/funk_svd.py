@@ -17,36 +17,23 @@ import time
 from pyspark.sql import functions as F
 
 from .base import _SGDRecommenderBase
-from .common import checkpoint, release_checkpoint
+from ..registry import checkpoint, release_checkpoint
 
 
 class FunkSVD(_SGDRecommenderBase):
     def _run_epochs(self, r_enc, u, i, collect_errors):
         q_cols = [f"q_{j}" for j in range(self.k)]
-        # Slim error cache (VERDICT r08 item 2 — the ~150 MB/epoch wide
-        # cache was the prime GC-outlier suspect in the 100-epoch bench):
-        # while the item factors fit the broadcast threshold (the SAME
-        # driver-known check that already broadcasts them inside
-        # _error_df), cache only (u_idx, i_idx, err) — ~3 columns instead
-        # of k+3 — and re-attach q_j for the user gradient through one
-        # broadcast probe of the checkpointed factors. Values are
-        # bit-identical (same doubles, same row order, same partial-agg
-        # grouping); only the cached bytes shrink ~10x. Past the
-        # threshold the re-attach would be a data-sized shuffle, so the
-        # wide cache stays — scale-adaptive, not a local[32] constant.
-        slim = self._dim_fits(r_enc, self.stats.n_items)
         for _ in range(self.epochs):
             t0 = time.perf_counter()
             # one stale error per epoch (models/funk_svd.py:160-161).
             # Cache ONLY what this epoch's consumers read: the user-side
-            # gradient needs (u_idx, err, q_j) — q_j re-attached from the
-            # broadcast when slim; the item side re-joins the UPDATED
-            # user factors onto (u_idx, i_idx, err). bu/bi/rating/p_j
-            # exist only inside the err expression — caching them would
-            # serialize ~32 dead doubles per rating per epoch.
+            # gradient needs (u_idx, err, q_j); the item side re-joins the
+            # UPDATED user factors onto (u_idx, i_idx, err). bu/bi/rating/
+            # p_j exist only inside the err expression — caching them
+            # would serialize ~32 dead doubles per rating per epoch.
             err = (
                 self._error_df(r_enc, u, i)
-                .select("u_idx", "i_idx", "err", *([] if slim else q_cols))
+                .select("u_idx", "i_idx", "err", *q_cols)
                 .persist()
             )
             # ALWAYS materialize the persisted error before anything
@@ -69,8 +56,7 @@ class FunkSVD(_SGDRecommenderBase):
             else:
                 err.count()
 
-            err_for_u = err.join(self._q_view(i), "i_idx") if slim else err
-            u_new = self._update_users(err_for_u, u)
+            u_new = self._update_users(err, u)
             u_new = checkpoint(u_new)
 
             # item update: stale error × UPDATED user factors

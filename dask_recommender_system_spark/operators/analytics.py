@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..data import RATINGS_SQL, load_table
-from ..registry import REGISTRY, query
+from ..registry import REGISTRY, checkpoint, query
 from .relational import ORACLE_EPOCH, _utc
 
 EPOCH_TS = ORACLE_EPOCH.format(col="ts")
@@ -326,9 +326,9 @@ def timeseries_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both the span branch and the calendar join consume daily; the
     # eager checkpoint (output-sized: |user|×|days| rows) keeps the
     # static plan from re-scanning the corpus per branch — same fix as
-    # data_drift_psi / chi2_independence; tracked for harness-side
-    # release (ADVICE r08)
-    daily = tracked_checkpoint(daily)
+    # data_drift_psi / chi2_independence; held by the query's registry
+    # scope until the caller's next query (ADVICE r08)
+    daily = checkpoint(daily)
     span = daily.groupBy("user_id").agg(
         F.min("day").alias("lo"), F.max("day").alias("hi")
     )
@@ -470,7 +470,7 @@ def data_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bin", "day")
         .agg(F.count("*").alias("n"))
     )
-    cells = tracked_checkpoint(cells)
+    cells = checkpoint(cells)
     mid = cells.agg(((F.min("day") + F.max("day")) / 2).alias("m"))
     c = (
         cells.crossJoin(F.broadcast(mid))
@@ -545,7 +545,7 @@ def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         (F.floor(F.unix_timestamp("ts") / 86400).cast("long") % 7).alias("dow"),
     )
-    o = tracked_checkpoint(
+    o = checkpoint(
         d.groupBy("event_type", "dow").agg(F.count("*").alias("obs"))
     )
     rm = o.groupBy("event_type").agg(F.sum("obs").cast("double").alias("row_n"))
@@ -1593,7 +1593,7 @@ def pareto_frontier_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("long")).alias("y"),
     )
     p = spark.sparkContext.defaultParallelism
-    blocked = tracked_checkpoint(it.repartitionByRange(p, F.col("x").desc()))
+    blocked = checkpoint(it.repartitionByRange(p, F.col("x").desc()))
     tagged = blocked.withColumn("_pid", F.spark_partition_id())
     # per-partition y-maxima in pid order (= descending x order), combined
     # into an EXCLUSIVE prefix max: everything in earlier blocks has
@@ -2039,7 +2039,7 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     p = spark.sparkContext.defaultParallelism
-    blocks = tracked_checkpoint(
+    blocks = checkpoint(
         it.repartitionByRange(p, F.col("rev_cents").desc(), F.col("item_id"))
     )
     tagged = blocks.withColumn("_pid", F.spark_partition_id())
@@ -3271,7 +3271,7 @@ def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(W.partitionBy("grp")).alias("ng"),
     )
     h = src.groupBy("cents").agg(F.count("*").alias("c"))
-    blocked = tracked_checkpoint(h.repartitionByRange(p, "cents"))
+    blocked = checkpoint(h.repartitionByRange(p, "cents"))
     tagged = blocked.withColumn("_pid", F.spark_partition_id())
     totals = tagged.groupBy("_pid").agg(F.sum("c").alias("s")).collect()
     offsets, acc = [], 0
@@ -6038,7 +6038,7 @@ def cramers_v_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
 
     def one_pair(df: DataFrame, a: str, b: str, label: str) -> DataFrame:
-        o = tracked_checkpoint(
+        o = checkpoint(
             df.groupBy(F.col(a).alias("a"), F.col(b).alias("b"))
             .agg(F.count("*").cast("long").alias("obs"))
         )

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..data import load_table, spread
-from ..registry import query
+from ..registry import checkpoint, query, release_checkpoint
 
 SHINGLE_N = 3
 
@@ -721,17 +721,13 @@ def min_label_components(
     (labels only decrease) detects convergence with one scalar agg per
     round. Property-tested against a union-find replica in
     tests/test_properties.py."""
-    from ..models.common import (
-        broadcast_if_fits,
-        release_checkpoint,
-        track_for_release,
-    )
+    from ..models.common import broadcast_if_fits
 
     a, b = pairs.columns
     # both directions in ONE pass over pairs (the union-of-selects form
     # carried the whole candidate-generation subtree twice in the plan —
     # the item_cf_similarity lesson, guide §2.4)
-    edges = (
+    edges = checkpoint(  # reused every round; released below
         pairs.select(
             F.explode(
                 F.array(
@@ -739,9 +735,7 @@ def min_label_components(
                     F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
                 )
             ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .localCheckpoint(eager=True)  # reused every round; released below
+        ).select("e.src", "e.dst")
     )
     # iterate ONLY over nodes that touch an edge: singletons can never
     # change label, so shipping the full node table through every round's
@@ -749,9 +743,7 @@ def min_label_components(
     # bytes; near-dup graphs are sparse, |touched| << |nodes|). Singletons
     # rejoin with lbl = own id at the end — bit-identical output.
     touched = edges.select(F.col("src").alias("node")).distinct()
-    labels = touched.select("node", F.col("node").alias("lbl")).localCheckpoint(
-        eager=True
-    )
+    labels = checkpoint(touched.select("node", F.col("node").alias("lbl")))
     # touched-node count is known after the checkpoint (one cheap count on
     # a materialized frame) — broadcast-hint the per-round label join
     # while the 2-BIGINT label table fits (guide §3.1; see pagerank_items)
@@ -765,13 +757,11 @@ def min_label_components(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("lbl").alias("nbr_lbl"))
         )
-        new_labels = (
-            labels.join(nbr, "node", "left")
-            .select(
+        new_labels = checkpoint(
+            labels.join(nbr, "node", "left").select(
                 "node",
                 F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
             )
-            .localCheckpoint(eager=True)
         )
         # the superseded round's checkpoint blocks are dead the moment the
         # new round materializes — release them RDD-level or a long bench/
@@ -784,10 +774,9 @@ def min_label_components(
             converged = True
             break
         prev_sum = cur_sum
+    # the returned plan reads only the FINAL labels checkpoint, which the
+    # query's registry scope holds until the caller's next query
     release_checkpoint(edges)
-    # the returned plan reads the FINAL labels checkpoint — tracked for
-    # harness-side release after the caller's action (ADVICE r08)
-    track_for_release(labels)
     if not converged:
         # The fixpoint check already detects this for free: labels only
         # decrease, so an unchanged sum IS convergence — and a changed sum
@@ -1250,7 +1239,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     within rank distance 2 — measured); the honest caveat is that SNM
     recall depends on the sort key clustering true pairs, which is why
     production runs multi-pass SNM with different keys."""
-    from ..models.common import encode_sorted_rank, tracked_checkpoint
+    from ..models.common import encode_sorted_rank
 
     d = load_table(spark, sf_dir, "documents")
     keyed = d.select(
@@ -1274,9 +1263,9 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpoint: rk is the junction of TWO diamonds (the bucket frame
     # self-joins, and cand feeds both the verify and the final join), so
     # un-pinned it replayed the rank window + parse 4x. |docs| rows of
-    # two BIGINTs — one tiny materialization, tracked for harness-side
-    # release (ADVICE r08).
-    rk = tracked_checkpoint(
+    # two BIGINTs — one tiny materialization, held by the query's
+    # registry scope (ADVICE r08).
+    rk = checkpoint(
         ranked.select(
             F.substring(F.col("value"), -20, 20).cast("long").alias("doc_id"),
             "rn",
@@ -1308,7 +1297,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # cand feeds the Jaccard verify AND the final rank_dist join —
     # checkpoint the O(n·w)-row candidate set once (see rk above)
-    cand = tracked_checkpoint(cand)
+    cand = checkpoint(cand)
     verified = exact_jaccard_on_pairs(d, cand.select("doc_a", "doc_b"))
     return (
         cand.join(verified, ["doc_a", "doc_b"])
@@ -1911,7 +1900,7 @@ def record_linkage_fs_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id,
                ROW_NUMBER() OVER (ORDER BY
                    lower(substr(trim(text), 1, {SNM_KEY_LEN}))
-                       || '|' || lpad(CAST(doc_id AS VARCHAR), 8, '0'))
+                       || '|' || lpad(CAST(doc_id AS VARCHAR), 20, '0'))
                    AS rn
         FROM documents),
     cand AS (

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..models.common import hash_uniform
-from ..registry import query
+from ..registry import checkpoint, query
 from ..data import RATINGS_SQL, load_table
 from .linalg import ENCODED_SQL, _init_sql, encoded_ratings
 
@@ -1072,9 +1072,7 @@ def conformal_prediction_interval(spark: SparkSession, sf_dir: str) -> DataFrame
     coverage lands within the finite-sample band of 90% (test-pinned).
     """
     e = encoded_ratings(spark, sf_dir)
-    from ..models.common import tracked_checkpoint
-
-    s = tracked_checkpoint(
+    s = checkpoint(
         e.select(
             "interaction_id",
             "rating",
@@ -1432,9 +1430,7 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("bin")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    from ..models.common import tracked_checkpoint
-
-    pre = tracked_checkpoint(
+    pre = checkpoint(
         b.select(
             "bin",
             "n",

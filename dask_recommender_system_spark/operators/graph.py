@@ -13,13 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..data import load_table
-from ..models.common import (
-    broadcast_if_fits,
-    release_checkpoint,
-    track_for_release,
-    tracked_checkpoint,
-)
-from ..registry import query
+from ..models.common import broadcast_if_fits
+from ..registry import checkpoint, query, release_checkpoint
 
 PR_ITERS = 5
 PR_DAMP = 0.85
@@ -90,7 +85,7 @@ def pagerank_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = e.groupBy("u", "v").agg(F.count("*").cast("double").alias("w"))
     deg = edges.groupBy("u").agg(F.sum("w").alias("dw"))
     p = spark.sparkContext.defaultParallelism
-    en = (
+    en = checkpoint(  # reused every iteration
         edges.join(deg, "u")
         .select("u", "v", (F.col("w") / F.col("dw")).alias("wn"))
         # hash-partition on the iteration join key BEFORE the checkpoint:
@@ -101,7 +96,6 @@ def pagerank_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and this is the difference between shuffling the edge table
         # once vs once per iteration.
         .repartition(p, "u")
-        .localCheckpoint(eager=True)  # reused every iteration
     )
     n = float(deg.count())
     ranks = deg.select(F.col("u").alias("node"), F.lit(1.0 / n).alias("r"))
@@ -114,7 +108,7 @@ def pagerank_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank_bytes = int(n) * 3 * 8
     for _ in range(PR_ITERS):
         br = broadcast_if_fits(ranks, rank_bytes)
-        new_ranks = (
+        new_ranks = checkpoint(
             en.join(br, en["u"] == br["node"])
             .groupBy(F.col("v").alias("node2"))
             .agg(
@@ -124,23 +118,21 @@ def pagerank_items(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("r")
             )
             .select(F.col("node2").alias("node"), "r")
-            .localCheckpoint(eager=True)
         )
         # free the superseded round's blocks immediately (the models/
         # base.py lesson): without this every pagerank run leaks
         # PR_ITERS checkpointed RDDs into the session and a long bench/
         # sweep session accumulates storage pressure (r08 profiling saw
         # late-session runs of this family 2-5x their early-session
-        # time). No-ops for the round-0 non-checkpointed seed frame.
+        # time). The round-0 seed frame is not a checkpoint and is ignored.
         release_checkpoint(ranks)
         ranks = new_ranks
     out = ranks.select("node", F.round(F.col("r") * n, 6).alias("rank_rel"))
     # the returned plan reads only the FINAL ranks checkpoint — the edge
     # table's blocks are dead once the last round has materialized; the
-    # final checkpoint itself is registered for harness-side release
-    # after the caller's action completes (ADVICE r08)
+    # final checkpoint stays in the query's registry scope until the
+    # caller's next query call (ADVICE r08)
     release_checkpoint(en)
-    track_for_release(ranks)
     return out
 
 
@@ -216,9 +208,9 @@ def triangle_stats_from_edges(e: DataFrame) -> DataFrame:
     # checkpoint the scan→collect_set→explode→distinct edge build replays
     # 4x in the plan (r08 audit — the item_cf_similarity union lesson).
     # The edge set is (u, v) BIGINT pairs, far smaller than the fact
-    # table; one materialization job replaces three replays. Tracked for
-    # harness-side release once the caller's action completes (ADVICE r08).
-    e = tracked_checkpoint(e)
+    # table; one materialization job replaces three replays. Held by the
+    # query's registry scope until the caller's next query (ADVICE r08).
+    e = checkpoint(e)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -239,9 +231,8 @@ def triangle_stats_from_edges(e: DataFrame) -> DataFrame:
         ).otherwise(F.col("du") * 10000000 + F.col("u")).alias("kdst"),
     )
     # same diamond: o feeds the two wedge legs AND the closing join —
-    # checkpoint once instead of re-running the degree joins 3x; tracked
-    # for harness-side release (ADVICE r08)
-    o = tracked_checkpoint(o)
+    # checkpoint once instead of re-running the degree joins 3x
+    o = checkpoint(o)
     e1 = o.select(
         F.col("src").alias("a"), F.col("dst").alias("b"), F.col("kdst").alias("kb")
     )
@@ -319,18 +310,16 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     p = spark.sparkContext.defaultParallelism
-    edges = e.repartition(p, "u").localCheckpoint(eager=True)
+    edges = checkpoint(e.repartition(p, "u"))
     seed = lines.agg(F.min("p").alias("node")).select(
         "node", F.lit(0).cast("long").alias("level")
     )
-    # depth <= BFS_MAX_DEPTH bounds the checkpoint count; all of them are
-    # tracked for harness-side release after the caller's action (ADVICE
-    # r08 — only the FINAL levels checkpoint feeds the returned plan, the
-    # rest are dead the moment the next union materializes)
-    levels = track_for_release(seed.localCheckpoint(eager=True))
+    # depth <= BFS_MAX_DEPTH bounds the checkpoint count; the query's
+    # registry scope holds all of them until the caller's next query
+    levels = checkpoint(seed)
     frontier = levels.select("node")
     for d in range(1, BFS_MAX_DEPTH + 1):
-        nxt = tracked_checkpoint(
+        nxt = checkpoint(
             edges.join(frontier, edges["u"] == frontier["node"])
             .select(F.col("v").alias("node"))
             .distinct()
@@ -339,7 +328,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if nxt.isEmpty():
             break
-        levels = tracked_checkpoint(levels.unionByName(nxt))
+        levels = checkpoint(levels.unionByName(nxt))
         frontier = nxt.select("node")
     release_checkpoint(edges)
     return levels
@@ -436,13 +425,12 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = e.groupBy("u", "v").agg(F.count("*").cast("double").alias("w"))
     deg = edges.groupBy("u").agg(F.sum("w").alias("dw"))
     p = spark.sparkContext.defaultParallelism
-    en = (
+    en = checkpoint(
         edges.join(deg, "u")
         .select("u", "v", (F.col("w") / F.col("dw")).alias("wn"))
         .repartition(p, "u")
-        .localCheckpoint(eager=True)
     )
-    nodes = deg.select(F.col("u").alias("node")).localCheckpoint(eager=True)
+    nodes = checkpoint(deg.select(F.col("u").alias("node")))
     n = float(nodes.count())
     cust = (
         load_table(spark, sf_dir, "customer")
@@ -468,16 +456,14 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node")
         .distinct()
     )
-    sn = seed_items.join(nodes, "node").localCheckpoint(eager=True)
+    sn = checkpoint(seed_items.join(nodes, "node"))
     ns = float(sn.count())
     seed_flag = sn.withColumn("is_seed", F.lit(True))
-    r = (
-        nodes.join(seed_flag, "node", "left")
-        .select(
+    r = checkpoint(
+        nodes.join(seed_flag, "node", "left").select(
             "node",
             F.when(F.col("is_seed"), F.lit(1.0 / ns)).otherwise(0.0).alias("r"),
         )
-        .localCheckpoint(eager=True)
     )
     rank_bytes = int(n) * 3 * 8
     for _ in range(PPR_ITERS):
@@ -487,7 +473,7 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("v").alias("mnode"))
             .agg(F.sum(F.col("r") * F.col("wn")).alias("mass"))
         )
-        new_r = (
+        new_r = checkpoint(
             nodes.join(mass, nodes["node"] == mass["mnode"], "left")
             .join(seed_flag.select("node", "is_seed"), "node", "left")
             .select(
@@ -497,18 +483,16 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + F.lit(PPR_DAMP) * F.coalesce(F.col("mass"), F.lit(0.0))
                 ).alias("r"),
             )
-            .localCheckpoint(eager=True)
         )
         # release the superseded round (see pagerank_items)
         release_checkpoint(r)
         r = new_r
     out = r.select("node", F.round(F.col("r") * n, 6).alias("ppr_rel"))
-    # only the final r checkpoint feeds the returned plan — tracked for
-    # harness-side release (ADVICE r08)
+    # only the final r checkpoint feeds the returned plan; the query's
+    # registry scope holds it until the caller's next query
     release_checkpoint(en)
     release_checkpoint(nodes)
     release_checkpoint(sn)
-    track_for_release(r)
     return out
 
 
@@ -579,7 +563,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     a = li.select(F.col("o"), F.col("p").alias("u"))
     b = li.select(F.col("o").alias("o2"), F.col("p").alias("v"))
     p = spark.sparkContext.defaultParallelism
-    edges = (
+    edges = checkpoint(
         a.join(b, (a["o"] == b["o2"]) & (a["u"] != b["v"]))
         .groupBy("u", "v")
         .agg(F.count("*").alias("w"))
@@ -589,7 +573,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
         # vote agg shuffles on (v, lab) either way (the pagerank_items
         # discipline — the old repartition("v") helped neither stage)
         .repartition(p, "u")
-        .localCheckpoint(eager=True)
     )
     labels = li.select(F.col("p").alias("node")).distinct().select(
         "node", F.col("node").alias("lab")
@@ -617,19 +600,17 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
             .filter(F.col("rn") == 1)
             .select("vnode", F.col("lab").alias("new_lab"))
         )
-        new_labels = (
+        new_labels = checkpoint(
             labels.join(win, labels["node"] == win["vnode"], "left")
             .select("node", F.coalesce("new_lab", "lab").alias("lab"))
-            .localCheckpoint(eager=True)
         )
         # release the superseded round (see pagerank_items)
         release_checkpoint(labels)
         labels = new_labels
     sizes = labels.groupBy("lab").agg(F.count("*").alias("community_size"))
-    # the returned plan reads only the final labels checkpoint — tracked
-    # for harness-side release (ADVICE r08)
+    # the returned plan reads only the final labels checkpoint, which the
+    # query's registry scope holds until the caller's next query
     release_checkpoint(edges)
-    track_for_release(labels)
     return (
         labels.join(F.broadcast(sizes), "lab")
         .select(
@@ -699,17 +680,16 @@ def graph_shortest_paths_weighted(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     a = li.select("o", F.col("p").alias("u"))
     b = li.select(F.col("o").alias("o2"), F.col("p").alias("v"))
-    edges = (
+    edges = checkpoint(
         a.join(b, (a["o"] == b["o2"]) & (a["u"] != b["v"]))
         .groupBy("u", "v")
         .agg(F.expr("CAST(1 + 1000 DIV COUNT(*) AS BIGINT)").alias("w"))
         .repartition("u")
-        .localCheckpoint()
     )
     seed = li.agg(F.min("p").alias("node")).select(
         "node", F.lit(0).cast("long").alias("dist")
     )
-    dist = seed.localCheckpoint()
+    dist = checkpoint(seed)
     for _ in range(BF_ROUNDS):
         cand = (
             edges.join(dist, edges["u"] == dist["node"])
@@ -717,18 +697,14 @@ def graph_shortest_paths_weighted(spark: SparkSession, sf_dir: str) -> DataFrame
             .agg(F.min(F.col("dist") + F.col("w")).alias("cdist"))
             .select(F.col("cnode").alias("node"), F.col("cdist").alias("dist"))
         )
-        new_dist = (
-            dist.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
+        new_dist = checkpoint(
+            dist.unionByName(cand).groupBy("node").agg(F.min("dist").alias("dist"))
         )
         # the superseded round's blocks are dead once the union has
         # materialized (the pagerank discipline, ADVICE r08)
         release_checkpoint(dist)
         dist = new_dist
     release_checkpoint(edges)
-    track_for_release(dist)
     return dist.orderBy("node")
 
 

@@ -16,7 +16,7 @@ from pyspark.sql import types as T
 
 from ..data import RATINGS_SQL, load_table
 from ..models.common import encode_sorted_rank
-from ..registry import query
+from ..registry import checkpoint, query
 
 IO_DIR = os.environ.get("SPARK_GRAFT_IO_DIR", "/tmp/drs_spark_io")
 
@@ -1656,9 +1656,7 @@ def dq_rule_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("v_disc"),
         F.sum(F.col("l_shipdate").isNull().cast("long")).alias("v_null"),
     )
-    from ..models.common import tracked_checkpoint
-
-    local = tracked_checkpoint(local)
+    local = checkpoint(local)
     rules_local = local.selectExpr(
         "stack(3, 'quantity_range', n_violations, n_checked,"
         " 'discount_range', v_disc, n_checked,"

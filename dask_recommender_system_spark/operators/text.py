@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..data import load_table, spread
-from ..registry import query
+from ..registry import checkpoint, query
 
 # Shared tokenizer expression (Spark + DuckDB twins). Lazy: Column
 # construction needs an active SparkContext.
@@ -1157,9 +1157,7 @@ def doc_similarity_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chain replays up to 4x in the plan (r08 audit; the item_cf lesson).
     # |docs| × TFIDF_TOP_N rows of (long, string, double) — one tiny
     # materialization job.
-    from ..models.common import tracked_checkpoint
-
-    wn = tracked_checkpoint(
+    wn = checkpoint(
         topk.join(nrm, "doc_id")
         .select("doc_id", "term", (F.col("score") / F.col("nn")).alias("w"))
     )

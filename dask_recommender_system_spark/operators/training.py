@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..data import RATINGS_SQL, load_table, spread
-from ..registry import query
+from ..registry import checkpoint, query
 from .text import ORACLE_TOKENS, TOKENS
 
 # Negative sampling: K kept negatives per positive, drawn from C > K
@@ -248,9 +248,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark_ = spark
     p = spark_.sparkContext.defaultParallelism
-    from ..models.common import tracked_checkpoint
-
-    blocks = tracked_checkpoint(
+    blocks = checkpoint(
         f.repartitionByRange(p, F.col("freq").desc(), F.col("term"))
     )
     tagged = blocks.withColumn("_pid", F.spark_partition_id())

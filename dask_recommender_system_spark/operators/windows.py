@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..data import RATINGS_SQL, load_table
-from ..registry import query
+from ..registry import checkpoint, query, release_checkpoint
 from .relational import ORACLE_EPOCH, _utc
 
 def _ratings_view(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2004,10 +2004,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("mu") + F.col("bu") + F.col("bi"), 6).alias("score"),
         )
     )
-    from ..models.common import tracked_checkpoint
-
-    cands = tracked_checkpoint(cands)
-    return mmr_from_candidates(cands)
+    return mmr_from_candidates(checkpoint(cands))
 
 
 def mmr_from_candidates(cands: DataFrame) -> DataFrame:
@@ -2016,8 +2013,6 @@ def mmr_from_candidates(cands: DataFrame) -> DataFrame:
     drive the greedy loop with candidate sets where the redundancy penalty
     provably fires (whether it fires on the derived ratings is an accident
     of the testdata generation)."""
-    from ..models.common import release_checkpoint, track_for_release
-
     w1 = W.partitionBy("user_id").orderBy(F.col("score").desc(), "item_id")
     sel = (
         cands.withColumn("rn", F.row_number().over(w1))
@@ -2054,13 +2049,12 @@ def mmr_from_candidates(cands: DataFrame) -> DataFrame:
                 F.lit(k).alias("pos"),
             )
         )
-        new_acc = acc.unionByName(pick).localCheckpoint()
+        new_acc = checkpoint(acc.unionByName(pick))
         # the superseded accumulator's blocks are dead once the union has
         # materialized (the pagerank discipline, ADVICE r08); round 1's
-        # acc is not a checkpoint — release_checkpoint no-ops there
+        # acc is not a checkpoint — release_checkpoint ignores it
         release_checkpoint(acc)
         acc = new_acc
-    track_for_release(acc)
     return acc.select(
         "user_id", F.col("pos").cast("long").alias("pos"),
         "item_id", "sim_attr", "score", "adjusted",

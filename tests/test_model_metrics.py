@@ -111,7 +111,7 @@ def test_epoch_loop_resource_discipline(spark, sf_dir):
         'BigInteger would overflow supported range')."""
     from dask_recommender_system_spark.data import load_table, ratings_from_df
     from dask_recommender_system_spark.models import FunkSVD
-    from dask_recommender_system_spark.models.common import RELEASE_STATS
+    from dask_recommender_system_spark.registry import RELEASE_STATS
 
     r = ratings_from_df(
         load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "orders")

@@ -34,16 +34,14 @@ def _resolve(spec: str):
 def main() -> None:
     label_a, spec_a, label_b, spec_b = sys.argv[1:5]
     action = sys.argv[5] if len(sys.argv) > 5 else "noop"
-    fn_a, fn_b = _resolve(spec_a), _resolve(spec_b)
-
-    from dask_recommender_system_spark.models.common import (
-        release_query_checkpoints,
-    )
-    from dask_recommender_system_spark.registry import load_all_operators
+    from dask_recommender_system_spark.registry import load_all_operators, scoped
     from dask_recommender_system_spark.session import get_spark
 
     bench = importlib.import_module("bench")
     load_all_operators()
+    # checkpoint scopes, as for a registered query: each call releases
+    # the previous call's checkpoints
+    fn_a, fn_b = scoped(_resolve(spec_a)), scoped(_resolve(spec_b))
     spark = get_spark("drs-ab")
     sc = spark.sparkContext
     spark.read.parquet(f"{SF_DIR}/region.parquet").count()
@@ -63,7 +61,6 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - t0
         spark.catalog.clearCache()
-        release_query_checkpoints()
         return dt
 
     results = {label_a: [], label_b: []}

@@ -35,12 +35,7 @@ def main() -> None:
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     con = duckdb_con(SF_DIR)
     failed = []
-    from dask_recommender_system_spark.models.common import (
-        release_query_checkpoints,
-    )
-
     for name in names:
-        release_query_checkpoints()
         q = REGISTRY[name]
         spark_pdf = q.fn(spark, SF_DIR).toPandas()
         if q.oracle is None:

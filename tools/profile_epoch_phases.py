@@ -22,8 +22,8 @@ def main() -> None:
 
     from dask_recommender_system_spark.data import ratings_cached
     from dask_recommender_system_spark.models.base import _SGDRecommenderBase
-    from dask_recommender_system_spark.models.common import checkpoint, release_checkpoint
     from dask_recommender_system_spark.models.funk_svd import FunkSVD
+    from dask_recommender_system_spark.registry import checkpoint, release_checkpoint
     from dask_recommender_system_spark.session import get_spark
 
     spark = get_spark("drs-epoch-phases")
