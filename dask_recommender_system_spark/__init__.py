@@ -12,6 +12,9 @@ Architecture (see SURVEY.md for the full blueprint):
 - ``registry``   — the query registry: every operator from SURVEY.md §2 is
                    registered with its PySpark implementation and (where
                    SQL-expressible) its DuckDB oracle twin.
+- ``blocks``     — ``block_scan``: global ordered scans (dense ranks,
+                   running sums/maxima, exact quantiles) without a
+                   single-partition window; shared by operators and models.
 - ``operators``  — relational / linalg / dedup / similarity / text /
                    multimodal / window operator implementations.
 - ``models``     — FunkSVD + "ALS" (relational SGD, reference-parity) and

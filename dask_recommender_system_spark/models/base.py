@@ -28,16 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..blocks import broadcast_if_fits, encode_column
 from ..registry import checkpoint
-from .common import (
-    CorpusStats,
-    broadcast_if_fits,
-    corpus_stats,
-    dot_wide,
-    encode_column,
-    init_params,
-    metrics_row,
-)
+from .common import CorpusStats, corpus_stats, dot_wide, init_params, metrics_row
 
 
 class _SGDRecommenderBase:

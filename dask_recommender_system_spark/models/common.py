@@ -14,126 +14,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..registry import checkpoint
-
-
-def encode_sorted_rank(
-    keys: DataFrame, col: str, idx_name: str, num_parts: int | None = None
-) -> DataFrame:
-    """Dense 0..n-1 encoding equal to rank-by-sorted-value, WITHOUT a
-    single-partition window — the two-pass block-offset scheme:
-
-    1. range-partition the distinct keys on value (partition order = value
-       order) and pin the partitioning with an eager checkpoint so
-       every downstream job sees identical blocks;
-    2. per-partition local rank via a window PARTITIONED by partition id
-       (each task ranks only its own block — parallel, bounded);
-    3. per-partition counts (one O(num_partitions)-row collect, cluster-
-       sized not data-sized) → cumulative offsets, broadcast-joined back;
-       global idx = offset[pid] + local_rank.
-
-    Because range partitioning orders partitions by value, the result is
-    bit-identical to ``row_number() OVER (ORDER BY value) - 1`` — so the
-    ROW_NUMBER-based DuckDB oracles remain valid — while the largest
-    single task holds |keys|/num_parts keys instead of all of them. At
-    10⁹ users this is the difference between a guaranteed OOM and a
-    routine shuffle (VERDICT r01 "What's wrong #3")."""
-    spark = keys.sparkSession
-    p = num_parts or spark.sparkContext.defaultParallelism
-    distinct = keys.select(col).distinct()
-    # explicit num_parts: AQE never coalesces a user-specified repartition,
-    # and the checkpoint pins block identity across the two passes
-    ranked = checkpoint(distinct.repartitionByRange(p, col))
-    tagged = ranked.withColumn("_pid", F.spark_partition_id())
-    counts = tagged.groupBy("_pid").count().collect()
-    offsets, acc = [], 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets.append((row["_pid"], acc))
-        acc += row["count"]
-    off_df = spark.createDataFrame(offsets, "_pid INT, _off LONG")
-    w = W.partitionBy("_pid").orderBy(col)
-    return (
-        tagged.withColumn("_lrank", F.row_number().over(w) - 1)
-        .join(F.broadcast(off_df), "_pid")
-        .select(col, (F.col("_off") + F.col("_lrank")).cast("long").alias(idx_name))
-    )
-
-
-def exact_quantiles_cont(
-    df: DataFrame, col: str, qs: tuple[float, ...], num_parts: int | None = None
-) -> dict[float, float]:
-    """Exact continuous quantiles (quantile_cont / Spark ``percentile``
-    semantics: 0-indexed position (n-1)·q, linear interpolation between
-    the two bracketing order statistics) of one column, WITHOUT the
-    built-in exact ``percentile`` aggregate.
-
-    Spark's exact percentile buffers every DISTINCT value of the column
-    in a single aggregation buffer (an OpenHashMap merged onto one
-    reducer) — fine for low-cardinality measures, a guaranteed heap OOM
-    for a continuous score column at scale (observed: 18M unique doubles
-    killed the JVM in the 30× sweep). This is the block-offset variant of
-    ``encode_sorted_rank`` applied to the full multiset:
-
-    1. range-partition the values (partition order = value order), pin
-       block identity with an eager checkpoint;
-    2. O(num_partitions) count collect → cumulative offsets;
-    3. global rank = offset[pid] + per-block row_number (window is
-       PARTITIONED by block — no single-partition sort anywhere);
-    4. fetch ONLY the ≤ 2·|qs| bracketing rows and interpolate
-       driver-side.
-
-    The largest task holds n/num_parts raw values instead of every
-    distinct value; the only driver traffic is O(parts + |qs|) rows.
-    Ties may straddle block boundaries — irrelevant, since equal values
-    interpolate to the same result regardless of tie order."""
-    import math
-
-    spark = df.sparkSession
-    p = num_parts or spark.sparkContext.defaultParallelism
-    blocked = checkpoint(
-        df.select(F.col(col).alias("_v")).repartitionByRange(p, "_v")
-    )
-    tagged = blocked.withColumn("_pid", F.spark_partition_id())
-    counts = tagged.groupBy("_pid").count().collect()
-    offsets, acc = [], 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets.append((row["_pid"], acc))
-        acc += row["count"]
-    n = acc
-    if n == 0:
-        return {q: float("nan") for q in qs}
-    plan, targets = [], set()
-    for q in qs:
-        pos = (n - 1) * q
-        lo, hi = int(math.floor(pos)), int(math.ceil(pos))
-        plan.append((q, pos, lo, hi))
-        targets.update((lo, hi))
-    off_df = spark.createDataFrame(offsets, "_pid INT, _off LONG")
-    w = W.partitionBy("_pid").orderBy("_v")
-    ranked = (
-        tagged.withColumn("_lrank", F.row_number().over(w) - 1)
-        .join(F.broadcast(off_df), "_pid")
-        .select("_v", (F.col("_off") + F.col("_lrank")).alias("_rank"))
-    )
-    rows = ranked.filter(F.col("_rank").isin(sorted(targets))).collect()
-    by_rank = {r["_rank"]: r["_v"] for r in rows}
-    return {
-        q: by_rank[lo] + (pos - lo) * (by_rank[hi] - by_rank[lo])
-        for q, pos, lo, hi in plan
-    }
-
-
-def encode_column(df: DataFrame, col: str, idx_name: str) -> DataFrame:
-    """Dictionary-encode a key column to dense 0..n-1 ints (reference
-    models/als.py:29-32's enumerate-dict, as a DataFrame). Delegates to the
-    block-offset encoder — same (value, sorted-rank idx) contract, no
-    single-partition window."""
-    return encode_sorted_rank(
-        df.select(F.col(col).alias("value")), "value", idx_name
-    )
+from ..blocks import hash_uniform
 
 
 @dataclass
@@ -168,17 +52,6 @@ def corpus_stats(r_enc: DataFrame) -> CorpusStats:
     )
 
 
-def hash_uniform(id_col: F.Column, j: int, scale: float, salt: int = 0) -> F.Column:
-    """Deterministic 'uniform [0, scale)' init from integer hashing — the
-    reproducible stand-in for the reference's unseeded da.random init
-    (models/als.py:73-76; SURVEY.md §5.1 shows exact-value parity with the
-    reference is impossible anyway). Reproducible across engines, retries
-    and repartitioning — at scale, init you can recompute beats init you
-    must persist."""
-    h = (id_col * 2654435761 + F.lit(j * 40503 + salt * 7919)) % 100000
-    return h.cast("double") / 100000.0 * scale
-
-
 def init_params(ids: DataFrame, idx_name: str, k: int, scale: float, salt: int) -> DataFrame:
     """Bias = 0 (da.zeros, models/als.py:68-71), factors = hash-uniform
     (models/als.py:73-76). Wide columns f_0..f_{k-1}."""
@@ -207,36 +80,3 @@ def metrics_row(err_df: DataFrame, n_ratings: int) -> tuple[float, float, float]
     mae = float(row["sae"]) / n_ratings
     mse = float(row["sse"]) / n_ratings
     return mae, mse, mse**0.5
-
-
-def broadcast_if_fits(df: DataFrame, est_bytes: int) -> DataFrame:
-    """Size-aware broadcast hint (guide §3.1): when the DRIVER knows a
-    frame's size (row count × width — e.g. from a count it already ran),
-    and that estimate fits under the session's autoBroadcastJoinThreshold,
-    hint the broadcast so the initial plan is the final plan. Iterative
-    loops joining a checkpointed dimension-sized frame otherwise plan
-    SortMergeJoin every round (LogicalRDD carries no size statistics) and
-    AQE only rescues the join AFTER materializing the dim-side exchange —
-    measured on the training epochs (18.3 → 13.5 jobs/epoch) and the
-    pagerank iterations (1.0–2.5 s → 0.73–0.82 s per round at sf0.1).
-    Past the threshold (e.g. 10⁹-node rank vectors, which must never
-    broadcast) the frame is returned unhinted and the planner keeps the
-    shuffle strategy — scale-adaptive, not a local[32] constant."""
-    raw = str(
-        df.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        )
-    ).strip().lower()
-    units = {"k": 1024, "m": 1024**2, "g": 1024**3}
-    mult = 1
-    raw = raw.removesuffix("b")
-    if raw and raw[-1] in units:
-        mult = units[raw[-1]]
-        raw = raw[:-1]
-    try:
-        thr = int(raw) * mult
-    except ValueError:
-        thr = 10 * 1024**2
-    if 0 < est_bytes <= thr:
-        return F.broadcast(df)
-    return df

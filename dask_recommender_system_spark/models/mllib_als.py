@@ -26,7 +26,7 @@ def fit_mllib_als(
     seed: int = 7,
 ) -> ALSModel:
     """ALS ids must be 32-bit ints; callers with string/64-bit keys encode
-    first (models/common.encode_column). coldStartStrategy='drop' excises
+    first (blocks.encode_column). coldStartStrategy='drop' excises
     unseen keys from predictions (the SGD models instead emit μ, matching
     the reference — both behaviors are legitimate; pick per pipeline)."""
     als = MLALS(

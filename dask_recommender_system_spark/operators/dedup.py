@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..blocks import broadcast_if_fits, encode_column, encode_sorted_rank
 from ..data import load_table, spread
 from ..registry import checkpoint, query, release_checkpoint
 
@@ -721,7 +722,6 @@ def min_label_components(
     (labels only decrease) detects convergence with one scalar agg per
     round. Property-tested against a union-find replica in
     tests/test_properties.py."""
-    from ..models.common import broadcast_if_fits
 
     a, b = pairs.columns
     # both directions in ONE pass over pairs (the union-of-selects form
@@ -1155,7 +1155,6 @@ def dedup_fuzzy_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     first dictionary-encoded with `encode_column`'s sorted-rank ids —
     min id IS the lexicographic-min word, so decoding the final label
     reproduces the oracle's MIN(word) canonical exactly."""
-    from ..models.common import encode_column
     from ..registry import REGISTRY as _REG
 
     vocab = (
@@ -1239,7 +1238,6 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     within rank distance 2 — measured); the honest caveat is that SNM
     recall depends on the sort key clustering true pairs, which is why
     production runs multi-pass SNM with different keys."""
-    from ..models.common import encode_sorted_rank
 
     d = load_table(spark, sf_dir, "documents")
     keyed = d.select(
@@ -1940,7 +1938,6 @@ def blocking_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     1. At 100 TB the candidate join is the SNM rank-bucket equi-join
     and truth-set evaluation runs on a SAMPLE in practice — the
     operator's shape is the audit harness either way."""
-    from ..models.common import encode_sorted_rank
 
     d = load_table(spark, sf_dir, "documents")
     truth = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")

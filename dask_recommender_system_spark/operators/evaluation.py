@@ -12,14 +12,14 @@ that survive 100 TB:
 - per-user ranking windows are keyed on ``u_idx`` (never a global sort);
 - global cumulative distributions (AUC, KS) use a two-level cumsum — a
   keyed within-bucket running sum plus a bucket-offset window over the
-  bounded bucket table — the windowed twin of the block-offset encoder
-  (``models/common.py:21``), so no unpartitioned data-sized window ever
+  bounded bucket table — the windowed twin of ``blocks.block_scan``,
+  so no unpartitioned data-sized window ever
   appears in a plan;
 - the hypothesis tests (Welch, Mann-Whitney) are pure moment/rank-count
   aggregates: one keyed shuffle to a tiny stats table, scalar math after.
 
 Predictions reuse the deterministic hash-init k=2 model every epoch
-operator shares (``models/common.py:105``), so the whole eval family is
+operator shares (``blocks.hash_uniform``), so the whole eval family is
 value-checkable against DuckDB oracles.
 """
 
@@ -30,9 +30,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..models.common import hash_uniform
-from ..registry import checkpoint, query
+from ..blocks import hash_uniform
 from ..data import RATINGS_SQL, load_table
+from ..registry import checkpoint, query
 from .linalg import ENCODED_SQL, _init_sql, encoded_ratings
 
 RANK_K = 10  # @k cutoff for the ranking-metrics report
@@ -616,7 +616,6 @@ def bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "interaction_id",
         F.explode(F.sequence(F.lit(0), F.lit(BOOT_B - 1))).alias("b"),
     )
-    from ..models.common import hash_uniform
 
     # pre-reduce mod a prime BEFORE the multiply so the product stays
     # inside int64 at any interaction_id scale (Spark would wrap silently,

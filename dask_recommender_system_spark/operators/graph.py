@@ -12,8 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..blocks import broadcast_if_fits
 from ..data import load_table
-from ..models.common import broadcast_if_fits
 from ..registry import checkpoint, query, release_checkpoint
 
 PR_ITERS = 5

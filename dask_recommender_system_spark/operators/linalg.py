@@ -20,8 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..blocks import encode_sorted_rank, exact_quantiles_cont, hash_uniform
 from ..data import RATINGS_SQL, load_table
-from ..models.common import encode_sorted_rank
 from ..registry import query
 
 K = 4  # factor rank used by the declared linalg queries (models use their own)
@@ -85,17 +85,19 @@ def encoded_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     query). The derivation is deterministic (sorted-rank encode, unique
     interaction_id tiebreak) and the columns are BIGINT/DOUBLE, so the
     parquet round-trip is value-exact; the stage key hashes the
-    derivation source + dataset content, and the cache root dies with
-    the process (no cross-run reuse)."""
+    derivation source (this module's `_encoded_live` and the whole
+    `blocks` module the encoder runs on) + dataset content, and the cache
+    root dies with the process (no cross-run reuse)."""
     import inspect
     import os
 
+    from .. import blocks
     from ..data import view_stage
 
     stage = view_stage(
         sf_dir,
         "encoded",
-        inspect.getsource(_encoded_live) + inspect.getsource(encode_sorted_rank),
+        inspect.getsource(_encoded_live) + inspect.getsource(blocks),
     )
     if not os.path.exists(f"{stage}/_SUCCESS"):
         _encoded_live(spark, sf_dir).write.mode("overwrite").parquet(stage)
@@ -268,7 +270,7 @@ _H = "2654435761"
 
 
 def _init_sql(idc: str, j: int, salt: int, scale: float) -> str:
-    """SQL twin of models.common.hash_uniform."""
+    """SQL twin of blocks.hash_uniform."""
     return (
         f"CAST(({idc} * {_H} + {j * 40503 + salt * 7919}) % 100000 AS DOUBLE)"
         f" / 100000.0 * {scale}"
@@ -317,7 +319,6 @@ def sgd_epoch_user_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_items because it sits inside the axis sum (models/als.py:168;
     SURVEY.md §1.4 caveat 2). The full multi-epoch fit (models/) runs this
     exact dataflow; here DuckDB verifies a single step value-for-value."""
-    from ..models.common import hash_uniform
 
     e = encoded_ratings(spark, sf_dir)
     mu = e.agg(F.round(F.avg("rating"), 6).alias("mu"))
@@ -425,7 +426,6 @@ def sgd_epoch_item_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference from FunkSVD's stale-error cadence). Also pins the
     n_users-scaled item-bias regularizer (models/als.py:172), which the
     user-side twin cannot cover."""
-    from ..models.common import hash_uniform
 
     e = encoded_ratings(spark, sf_dir)
     mu = e.agg(F.round(F.avg("rating"), 6).alias("mu"))
@@ -551,7 +551,6 @@ def bpr_epoch_user_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     gradient aggregate. (The multi-epoch generalization iterates exactly
     like models/base.py: update → checkpoint → re-derive; factors stay
     relational throughout.)"""
-    from ..models.common import hash_uniform
     from .training import negative_sampling
 
     t = negative_sampling(spark, sf_dir)
@@ -620,7 +619,6 @@ def bpr_epoch_item_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     (factors are inline hash expressions). Together the pair IS one full
     BPR epoch; the multi-epoch loop iterates them exactly like
     models/base.py alternates user/item updates."""
-    from ..models.common import hash_uniform
     from .training import negative_sampling
 
     t = negative_sampling(spark, sf_dir)
@@ -701,13 +699,12 @@ def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     (eval_metrics = pointwise RMSE/MAE; this = ranking usefulness).
     Predictions are the deterministic hash-init k=2 model the epoch
     operators share, so the whole report is value-checkable. Deciles via
-    exact block-offset quantiles (models/common.exact_quantiles_cont) —
-    never a global NTILE sort, and NOT the built-in exact ``percentile``
-    aggregate either: pred is unique per (user, item) pair, so that
-    aggregate's distinct-value buffer is data-sized and killed the JVM at
-    the 30× sweep (r08). The cuts enter the plan as folded literals; the
-    only data-sized shuffle is the final decile agg."""
-    from ..models.common import exact_quantiles_cont, hash_uniform
+    ``blocks.exact_quantiles_cont`` — never a global NTILE sort, and NOT
+    the built-in exact ``percentile`` aggregate either: pred is unique
+    per (user, item) pair, so that aggregate's distinct-value buffer is
+    data-sized and killed the JVM at the 30× sweep (r08). The cuts enter
+    the plan as folded literals; the only data-sized shuffle is the final
+    decile agg."""
 
     e = encoded_ratings(spark, sf_dir)
     pred = (
@@ -807,7 +804,6 @@ def als_implicit_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     k(k+1)/2 gram sums + a Newton/Cholesky pandas_udf solve, same plan
     shape. Gram entries are ROUNDED before the per-user solve so both
     engines invert bit-identical matrices."""
-    from ..models.common import hash_uniform
 
     e = encoded_ratings(spark, sf_dir)
     y = e.select("i_idx").distinct().select(

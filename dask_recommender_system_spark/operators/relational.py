@@ -14,8 +14,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..blocks import encode_sorted_rank
 from ..data import RATINGS_SQL, load_table
-from ..models.common import encode_sorted_rank
 from ..registry import checkpoint, query
 
 IO_DIR = os.environ.get("SPARK_GRAFT_IO_DIR", "/tmp/drs_spark_io")
@@ -861,12 +861,10 @@ ENCODE_USERS_SQL = f"""
 @query("encode_ids", oracle=ENCODE_USERS_SQL)
 def encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: dictionary-encode ids to dense 0..n-1 ints (reference
-    models/als.py:29-32 ``{x: i for i, x in enumerate(ids)}``). Uses the
-    two-pass block-offset encoder (models/common.encode_sorted_rank):
-    range-partition the distinct keys, rank within each partition, add
-    cumulative block offsets — bit-identical to ROW_NUMBER() OVER (ORDER BY
-    user_id) - 1 (so the oracle holds) with no single-partition window, the
-    shape that survives 10⁹-key dimensions."""
+    models/als.py:29-32 ``{x: i for i, x in enumerate(ids)}``) with
+    ``blocks.encode_sorted_rank`` — bit-identical to ROW_NUMBER() OVER
+    (ORDER BY user_id) - 1 (so the oracle holds) with no single-partition
+    window, the shape that survives 10⁹-key dimensions."""
     return encode_sorted_rank(
         _ratings(spark, sf_dir).select("user_id"), "user_id", "u_idx"
     )

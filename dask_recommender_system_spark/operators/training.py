@@ -15,8 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..blocks import block_scan, block_window
 from ..data import RATINGS_SQL, load_table, spread
-from ..registry import checkpoint, query
+from ..registry import query
 from .text import ORACLE_TOKENS, TOKENS
 
 # Negative sampling: K kept negatives per positive, drawn from C > K
@@ -25,7 +26,7 @@ from .text import ORACLE_TOKENS, TOKENS
 NEG_K = 4
 NEG_CAND = 8
 # Knuth multiplicative-hash constant — same one the factor-init uses
-# (models/common.py hash_uniform); consecutive +j offsets guarantee the
+# (blocks.hash_uniform); consecutive +j offsets guarantee the
 # C candidates of one interaction are distinct whenever |items| >= C.
 HASH_A = 2654435761
 # prime > any per-user row count; also the pre-reduction modulus applied to
@@ -224,16 +225,9 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-vocab while the mass before it is under VOCAB_MASS_PCT% (the
     frequency-cutoff step of BPE/WordPiece vocab induction).
 
-    The global rank + running mass are computed WITHOUT a single-partition
-    window, via the same two-pass block-offset scheme as the id encoder
-    (models/common.py encode_sorted_rank): range-partition the |vocab|-row
-    frequency table on (freq DESC, term), pin blocks with an eager
-    localCheckpoint, rank/cumsum each block locally under a
-    partition-id-keyed window, then add broadcast per-block (row, mass)
-    offsets from one O(num_partitions)-row collect. Bit-identical to
-    ``ROW_NUMBER()/SUM() OVER (ORDER BY freq DESC, term)`` — the DuckDB
-    oracle IS that query — while the largest single task holds
-    |vocab|/num_parts tokens instead of all of them. The heavy corpus
+    The global rank + running mass are a ``blocks.block_scan``
+    over (freq DESC, term) — bit-identical to ``ROW_NUMBER()/SUM() OVER
+    (ORDER BY freq DESC, term)``, the DuckDB oracle. The heavy corpus
     scan collapses to |vocab| rows in the keyed frequency agg first; at
     open-web scale add a min-frequency prefilter before ranking
     (SCALE.md)."""
@@ -246,37 +240,23 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term")
         .agg(F.count("*").alias("freq"))
     )
-    spark_ = spark
-    p = spark_.sparkContext.defaultParallelism
-    blocks = checkpoint(
-        f.repartitionByRange(p, F.col("freq").desc(), F.col("term"))
+    order = (F.col("freq").desc(), F.col("term"))
+    blocks, totals = block_scan(
+        f, order, _row_off=("sum", F.lit(1)), _mass_off=("sum", "freq")
     )
-    tagged = blocks.withColumn("_pid", F.spark_partition_id())
-    stats = tagged.groupBy("_pid").agg(
-        F.count("*").alias("_n"), F.sum("freq").alias("_mass")
-    ).collect()
-    offs, row_acc, mass_acc = [], 0, 0
-    for row in sorted(stats, key=lambda r: r["_pid"]):
-        offs.append((row["_pid"], row_acc, mass_acc))
-        row_acc += row["_n"]
-        mass_acc += row["_mass"]
-    off_df = spark_.createDataFrame(offs, "_pid INT, _row_off LONG, _mass_off LONG")
-    total = F.lit(mass_acc)
-    lw = W.partitionBy("_pid").orderBy(F.col("freq").desc(), "term")
+    total = F.lit(totals["_mass_off"])
+    lw = block_window(*order)
     cum = F.col("_mass_off") + F.sum("freq").over(
         lw.rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    return (
-        tagged.join(F.broadcast(off_df), "_pid")
-        .select(
-            "term",
-            "freq",
-            (F.col("_row_off") + F.row_number().over(lw)).cast("long").alias("rnk"),
-            F.round(cum.cast("double") / total, 6).alias("cum_share"),
-            ((cum - F.col("freq")) * 100 < VOCAB_MASS_PCT * total)
-            .cast("long")
-            .alias("in_vocab"),
-        )
+    return blocks.select(
+        "term",
+        "freq",
+        (F.col("_row_off") + F.row_number().over(lw)).cast("long").alias("rnk"),
+        F.round(cum.cast("double") / total, 6).alias("cum_share"),
+        ((cum - F.col("freq")) * 100 < VOCAB_MASS_PCT * total)
+        .cast("long")
+        .alias("in_vocab"),
     )
 
 

@@ -1,13 +1,15 @@
 """Static import integrity of the package, checked in a fresh interpreter.
 
-Three checks over every module of ``dask_recommender_system_spark``:
+Four checks over every module of ``dask_recommender_system_spark``:
 
 1. the module imports;
 2. every ``from ... import name`` resolves — including the lazy imports
    inside function bodies, which an import of the module never runs;
 3. every implicit global a function reads (``symtable``) is a module
    global or a builtin — a name used but never imported fails only when
-   that code path runs.
+   that code path runs;
+4. importing any one module under ``operators/`` or ``streaming/`` on its
+   own loads nothing from ``models`` (the training stack).
 
 The checks run in a subprocess so a half-finished import left in
 ``sys.modules`` by another test can neither hide nor cause a failure.
@@ -102,9 +104,33 @@ def _implicit_globals(mod_name: str, path: str, source: str) -> list[str]:
     return problems
 
 
+def _layering() -> list[str]:
+    """Import each operator/streaming module alone, from a clean package
+    state, and report any ``models`` module it pulls in."""
+    def purge() -> None:
+        for m in [m for m in sys.modules if m.startswith(PACKAGE)]:
+            del sys.modules[m]
+
+    problems = []
+    layers = (f"{PACKAGE}.operators.", f"{PACKAGE}.streaming.")
+    for mod_name, _ in _modules():
+        if not mod_name.startswith(layers):
+            continue
+        purge()
+        try:
+            importlib.import_module(mod_name)
+        except Exception:
+            continue  # reported by the import check
+        loaded = sorted(m for m in sys.modules if m.startswith(f"{PACKAGE}.models"))
+        if loaded:
+            problems.append(f"{mod_name}: importing it loads {', '.join(loaded)}")
+    purge()
+    return problems
+
+
 def find_problems() -> list[str]:
     sys.path.insert(0, REPO)
-    problems = []
+    problems = _layering()
     for mod_name, path in _modules():
         try:
             importlib.import_module(mod_name)

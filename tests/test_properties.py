@@ -737,9 +737,10 @@ def test_exact_quantiles_cont_matches_builtin_percentile(spark):
     be bit-identical to Spark's percentile on the same multiset —
     including duplicates straddling range-partition boundaries and
     interpolated positions."""
+    import math
     import random
 
-    from dask_recommender_system_spark.models.common import exact_quantiles_cont
+    from dask_recommender_system_spark.blocks import exact_quantiles_cont
 
     rng = random.Random(87)
     # duplicates (coarse grid) + unique tail, sized so several values
@@ -755,6 +756,15 @@ def test_exact_quantiles_cont_matches_builtin_percentile(spark):
     ).first()
     for i, q in enumerate(qs):
         assert got[q] == want_row[f"q{i}"], (q, got[q], want_row[f"q{i}"])
+
+    # empty column: every quantile is NaN (the n == 0 branch)
+    empty = spark.createDataFrame([], "v DOUBLE")
+    assert all(math.isnan(x) for x in exact_quantiles_cont(empty, "v", qs).values())
+    # all ties: every row lands in one range block, the others stay empty
+    ties = spark.createDataFrame([(2.5,)] * 50, "v DOUBLE")
+    got = exact_quantiles_cont(ties, "v", qs, num_parts=8)
+    want = ties.agg(*[F.expr(f"percentile(v, {q})") for q in qs]).first()
+    assert [got[q] for q in qs] == list(want)
 
 
 def test_simhash_verified_prefilter_sits_at_banding_guarantee(spark):

@@ -34,11 +34,8 @@ def main() -> None:
 
     m = FunkSVD(n_factors=30, lr=0.001, reg=0.001, epochs=1)
     # run fit() prep by hand (copy of base.fit up to the loop)
-    from dask_recommender_system_spark.models.common import (
-        corpus_stats,
-        encode_column,
-        init_params,
-    )
+    from dask_recommender_system_spark.blocks import encode_column
+    from dask_recommender_system_spark.models.common import corpus_stats, init_params
 
     user_col, item_col, rating_col = "user_id", "item_id", "rating"
     m.user_col, m.item_col = user_col, item_col
