@@ -17,6 +17,8 @@ exact for parquet); CSV/JSONL sources in ``sources/`` are schema-explicit
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -172,7 +174,6 @@ def _ratings_fingerprint(sf_dir: str) -> str:
     the cache key for :func:`ratings_cached`, so regenerated testdata or a
     changed derivation re-materializes instead of replaying stale rows."""
     import hashlib
-    import os
 
     h = hashlib.md5(f"v{_derivation_hash()}|{sf_dir}".encode())
     for t in ("lineitem", "orders"):
@@ -191,6 +192,12 @@ def _ratings_fingerprint(sf_dir: str) -> str:
             st = os.stat(p)
             h.update(f"{t}:{st.st_size}:{st.st_mtime_ns};".encode())
     return h.hexdigest()[:16]
+
+
+#: scratch root for the queries that round-trip through files (CSV/JSONL/
+#: ORC writers, foreachBatch sinks, stream sources); perfbench points it
+#: at a per-run directory
+IO_DIR = os.environ.get("SPARK_GRAFT_IO_DIR", "/tmp/drs_spark_io")
 
 
 # Process-lifetime root for the materialized ratings view. A cross-run
@@ -242,8 +249,6 @@ def ratings_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     process (pytest, the oracle sweeps) correct across multiple sf_dirs
     and regenerated fixtures. Values are identical to :func:`ratings` —
     parquet round-trips BIGINT/DOUBLE/DATE exactly."""
-    import os
-
     stage = f"{_cache_root()}/{_ratings_fingerprint(sf_dir)}"
     if not os.path.exists(f"{stage}/_SUCCESS"):
         ratings(spark, sf_dir).write.mode("overwrite").parquet(stage)

@@ -21,18 +21,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..blocks import encode_sorted_rank, exact_quantiles_cont, hash_uniform
-from ..data import RATINGS_SQL, load_table
+from ..data import RATINGS_SQL, load_table, ratings_cached
 from ..registry import query
 
 K = 4  # factor rank used by the declared linalg queries (models use their own)
-
-
-def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..data import ratings_cached
-
-    # derive-once materialized view (SCALE.md): values identical to the
-    # live ratings_from_df derivation, minus the md5-per-row view prep
-    return ratings_cached(spark, sf_dir)
 
 
 ENCODED_SQL = f"""
@@ -55,7 +47,7 @@ def _encoded_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The live derivation behind :func:`encoded_ratings`: dedup-keep-last
     (D2) then dense-encode (A2/J1) — the reference's pipeline order
     (run_als.py:9-11 → models/als.py:26-32)."""
-    r = _ratings(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     w = W.partitionBy("user_id", "item_id").orderBy(
         F.col("ts").desc(), F.col("interaction_id").desc()
     )

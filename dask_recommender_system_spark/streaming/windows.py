@@ -4,11 +4,18 @@ windows as streaming-ready, and this module proves it by running the same
 aggregation through ``readStream`` → watermark → windowed agg → sink).
 
 Local smoke: the file source replays `events.parquet` as a bounded
-stream; ``processAllAvailable`` drains it synchronously into a memory
-sink, so the streaming result is comparable against the *batch* oracle —
+stream; :func:`drain` runs it synchronously to the end, so the streaming
+result is comparable against the *batch* oracle —
 `stream_window_tumbling` therefore gets the SAME DuckDB oracle as
 `window_events_tumbling`: one definition of correctness for both
 execution modes.
+
+A drained result comes back as a scope-held checkpoint
+(``registry.checkpoint``), not as a memory table: the memory sink's temp
+view is dropped before the query returns, and the next top-level query
+call releases the rows — run the result's action before that call. The
+three ``foreachBatch`` queries write their own parquet directories under
+``data.IO_DIR`` instead.
 """
 
 from __future__ import annotations
@@ -20,11 +27,11 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..registry import query
+from ..data import IO_DIR
+from ..registry import REGISTRY, checkpoint, query
 from ..operators.windows import window_events_tumbling  # reuse the oracle
 from ..operators import grouped as _grouped  # noqa: F401  (register the
 # batch hysteresis twin before this module reuses its oracle below)
-from ..registry import REGISTRY
 
 # src path -> sniffed parquet schema (see read_events_stream)
 _SNIFFED_SCHEMA: dict[str, T.StructType] = {}
@@ -193,17 +200,23 @@ def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def run_stream_to_memory(agg: DataFrame, name: str) -> None:
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
+def drain(stream: DataFrame, mode: str) -> DataFrame:
+    """Run a bounded stream to the end and return its rows: a memory sink
+    under a fresh name, ``processAllAvailable``, stop. The rows come back
+    as a ``registry.checkpoint``, so the running query's scope holds them
+    until the next top-level query call, and the sink's temp view is
+    dropped — no call leaves a memory table on the driver heap."""
+    spark = stream.sparkSession
+    name = f"strm_{uuid.uuid4().hex[:8]}"
+    q = stream.writeStream.outputMode(mode).format("memory").queryName(name).start()
     try:
-        q.processAllAvailable()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return checkpoint(spark.table(name))
     finally:
-        q.stop()
+        spark.catalog.dropTempView(name)
 
 
 @query(
@@ -215,10 +228,8 @@ def stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink, drained synchronously; checked against the *batch* oracle
     so streaming and batch share one correctness definition."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    name = f"strm_{uuid.uuid4().hex[:8]}"
     agg = tumbling_counts(read_events_stream(spark, sf_dir))
-    run_stream_to_memory(agg, name)
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 def sliding_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -241,10 +252,8 @@ def stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark, drained to a memory sink; same DuckDB oracle as the batch
     `window_events_sliding` — one correctness definition across modes."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    name = f"strm_{uuid.uuid4().hex[:8]}"
     agg = sliding_counts(read_events_stream(spark, sf_dir))
-    run_stream_to_memory(agg, name)
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 @query(
@@ -280,18 +289,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "hour_start"])
         .select("user_id", "event_type", "hour_start")
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain(deduped, "append")
 
 
 @query(
@@ -323,9 +321,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(agg, name)
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 @query(
@@ -389,13 +385,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_timestamp("purchase_tss").alias("purchase_ts"),
         F.round("purchase_value", 6).alias("purchase_value"),
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain(joined, "append")
 
 
 @query(
@@ -415,13 +405,7 @@ def stream_parse_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = write_log_lines(spark, sf_dir)
     parsed = parse_log_lines(spark.readStream.text(path))
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = parsed.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain(parsed, "append")
 
 
 @query(
@@ -446,8 +430,6 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, pinning that stream → foreachBatch → parquet loses and
     duplicates nothing."""
     import shutil
-
-    from ..operators.relational import IO_DIR
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     out_dir = f"{IO_DIR}/stream_fb_sink"
@@ -534,13 +516,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.unix_timestamp("ts").alias("ts_s")
     )
     out = apply_sessionization(stream)
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain(out, "append")
 
 
 STREAM_HLL_BOUND = 0.05  # HLL++ default lgK rel-err ~1.6%; headroom for tiny windows
@@ -572,7 +548,6 @@ def stream_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    name = f"strm_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -580,8 +555,7 @@ def stream_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.hll_sketch_agg("user_id").alias("sk"))
         .select(F.unix_timestamp("w.start").alias("window_start"), "sk")
     )
-    run_stream_to_memory(agg, name)
-    sketches = spark.table(name)
+    sketches = drain(agg, "complete")
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(
@@ -655,7 +629,6 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.analytics import PSI_BIN_MAX, PSI_BIN_W
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    name = f"strm_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -669,8 +642,7 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.unix_timestamp("w.start").alias("h"), "bin", "n")
     )
-    run_stream_to_memory(agg, name)
-    cells = spark.table(name)
+    cells = drain(agg, "complete")
     mid = cells.agg(((F.min("h") + F.max("h")) / 2).alias("m"))
     c = (
         cells.crossJoin(F.broadcast(mid))
@@ -739,7 +711,6 @@ def stream_topk_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the cells table is what you persist; re-ranking with a
     different k is cell arithmetic, never an event replay."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    name = f"strm_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, sf_dir)
     cells = (
         ev.withColumn("p", F.from_json("props", "k BIGINT"))
@@ -751,8 +722,7 @@ def stream_topk_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.unix_timestamp("w.start").alias("window_start"), "item_k", "n")
     )
-    run_stream_to_memory(cells, name)
-    drained = spark.table(name)
+    drained = drain(cells, "complete")
     rk = W.partitionBy("window_start").orderBy(F.col("n").desc(), "item_k")
     return (
         drained.withColumn("rnk", F.row_number().over(rk).cast("long"))
@@ -790,7 +760,6 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from ..data import load_table
-    from ..operators.relational import IO_DIR
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     cdc_dir = f"{IO_DIR}/cdc_src"
@@ -895,18 +864,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = stream.join(F.broadcast(dim), "user_id").select(
         "event_id", "user_id", "segment", "nation", "value"
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain(enriched, "append")
 
 
 @query(
@@ -941,7 +899,6 @@ def stream_kll_quantile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    name = f"strm_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -949,8 +906,7 @@ def stream_kll_quantile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.kll_sketch_agg_double("value").alias("sk"))
         .select(F.unix_timestamp("w.start").alias("window_start"), "sk")
     )
-    run_stream_to_memory(agg, name)
-    sketches = spark.table(name).select(
+    sketches = drain(agg, "complete").select(
         "window_start",
         F.kll_sketch_get_quantile_double("sk", F.lit(0.5)).alias("est_p50"),
     )
@@ -1018,7 +974,6 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..data import load_table
-    from ..operators.relational import IO_DIR
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     src_dir = f"{IO_DIR}/ckpt_src"
@@ -1107,7 +1062,6 @@ def stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..data import load_table, normalize_event_ts
-    from ..operators.relational import IO_DIR
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     src_dir = f"{IO_DIR}/upd_src"
@@ -1136,18 +1090,7 @@ def stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sink = spark.table(name)
+    sink = drain(agg, "update")
     # last emission per key wins; n is monotonically nondecreasing per
     # key across emissions, so max_by on n with sum_value tiebreak IS the
     # final state
@@ -1191,16 +1134,19 @@ def stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     try:
-        # awaitTermination returns False on timeout — in that case the
-        # memory table is incomplete, so fail loudly instead of returning
-        # a silently-wrong aggregate
-        if not q.awaitTermination(timeout=300):
-            raise TimeoutError(
-                "stream_available_now did not terminate within 300 s"
-            )
+        try:
+            # awaitTermination returns False on timeout — in that case the
+            # memory table is incomplete, so fail loudly instead of
+            # returning a silently-wrong aggregate
+            if not q.awaitTermination(timeout=300):
+                raise TimeoutError(
+                    "stream_available_now did not terminate within 300 s"
+                )
+        finally:
+            q.stop()
+        return checkpoint(spark.table(name))
     finally:
-        q.stop()
-    return spark.table(name)
+        spark.catalog.dropTempView(name)
 
 
 @query(
@@ -1233,9 +1179,7 @@ def stream_daily_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["user_id", "day"]
     )
     agg = dd.groupBy("day").agg(F.count("*").alias("dau"))
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(agg, name)
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 @query(
@@ -1317,18 +1261,7 @@ def stream_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_timestamp("click_tss").alias("click_ts"),
         F.unix_timestamp("purchase_tss").alias("purchase_ts"),
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("click_id")
+    return drain(joined, "append").orderBy("click_id")
 
 
 @query(
@@ -1364,18 +1297,7 @@ def stream_hysteresis_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = apply_hysteresis(ev)
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("user_id", "sec", "event_id")
+    return drain(out, "append").orderBy("user_id", "sec", "event_id")
 
 
 @query(
@@ -1437,10 +1359,8 @@ def stream_countmin_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "j", "bucket")
         .agg(F.count("*").alias("c"))
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(hourly, name)
     return (
-        spark.table(name)
+        drain(hourly, "complete")
         .groupBy("j", "bucket")
         .agg(F.sum("c").alias("c"))
         .orderBy("j", "bucket")
@@ -1475,18 +1395,7 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_timestamp("ts").alias("sec"),
     )
     out = apply_token_bucket(ev)
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("user_id", "sec", "event_id")
+    return drain(out, "append").orderBy("user_id", "sec", "event_id")
 
 
 def _bp_oracle() -> str:
@@ -1553,18 +1462,7 @@ def stream_bin_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     items = o.join(li, "orderkey")
     out = apply_bin_pack(items)
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("custkey", "day", "orderkey")
+    return drain(out, "append").orderBy("custkey", "day", "orderkey")
 
 
 @query(
@@ -1618,18 +1516,7 @@ def stream_dau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dau",
         )
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("day")
+    return drain(agg, "append").orderBy("day")
 
 
 @query(
@@ -1702,18 +1589,7 @@ def stream_slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
             "e",
         )
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        hourly.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    h = spark.table(name)
+    h = drain(hourly, "append")
     grid = h.agg(F.min("hour").alias("h0"), F.max("hour").alias("h1")).select(
         F.explode(F.sequence("h0", "h1")).alias("hour")
     )
@@ -1833,18 +1709,7 @@ def stream_queue_lindley(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("nation", "orderkey", "arr_s", "svc_s")
     )
     out = apply_lindley(items)
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("nation", "arr_s", "orderkey")
+    return drain(out, "append").orderBy("nation", "arr_s", "orderkey")
 
 
 @query(
@@ -1923,18 +1788,7 @@ def stream_cart_abandonment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
     )
     out = apply_sessionization_outcomes(ev)
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sess = spark.table(name)
+    sess = drain(out, "append")
     ab = F.when(
         (F.col("has_click") == 1) & (F.col("has_purchase") == 0), 1
     ).otherwise(0)

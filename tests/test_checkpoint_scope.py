@@ -12,7 +12,9 @@ from dask_recommender_system_spark.registry import (
 
 from .oracle_util import compare, duckdb_con
 
-# every registered query that makes a checkpoint
+# the batch queries that make a checkpoint; every stream query checkpoints
+# its drained rows too, and test_stream_drains_leave_no_sink_views covers
+# those
 CHECKPOINTING = [
     "quantile_normalize",
     "cramers_v_matrix",
@@ -58,6 +60,33 @@ def test_storage_bounded_across_passes(spark, sf_dir):
 
     held_1 = one_pass()
     held_2 = one_pass()
+    assert held_2 <= held_1, (held_1, held_2)
+    assert RELEASE_STATS["failed"] == failed_before == 0, RELEASE_STATS
+
+
+def test_stream_drains_leave_no_sink_views(spark, sf_dir):
+    """A drained stream hands its rows to the query scope: no memory-sink
+    temp view outlives its query call, and storage stays bounded across
+    passes with no cleanup between them."""
+    qs = all_queries()
+    names = [n for n, fn in qs.items() if fn.__module__.endswith(".streaming.windows")]
+    assert names
+    sc = spark.sparkContext
+    failed_before = RELEASE_STATS["failed"]
+
+    def temp_views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    def one_pass() -> int:
+        for name in names:
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return len(sc._jsc.sc().getRDDStorageInfo())
+
+    before = temp_views()
+    held_1 = one_pass()
+    assert temp_views() == before
+    held_2 = one_pass()
+    assert temp_views() == before
     assert held_2 <= held_1, (held_1, held_2)
     assert RELEASE_STATS["failed"] == failed_before == 0, RELEASE_STATS
 

@@ -576,7 +576,7 @@ def test_sketch_roundtrip_survives_storage(spark, sf_dir):
     with a binary column)."""
     import os
 
-    from dask_recommender_system_spark.operators.relational import IO_DIR
+    from dask_recommender_system_spark.data import IO_DIR
 
     rows = REGISTRY["sketch_persist_roundtrip"].fn(spark, sf_dir).collect()
     assert rows and all(r["within_bound"] == 1 for r in rows)

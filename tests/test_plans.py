@@ -184,7 +184,7 @@ def test_sink_parquet_sorted_files_carry_ts_stats(spark, sf_dir):
     import pyarrow.parquet as pq
 
     q("sink_parquet_sorted", spark, sf_dir).count()
-    from dask_recommender_system_spark.operators.relational import IO_DIR
+    from dask_recommender_system_spark.data import IO_DIR
 
     ranges = []
     for f in glob.glob(f"{IO_DIR}/events_sorted_parquet/*.parquet"):
@@ -547,7 +547,7 @@ def test_zorder_layout_clusters_both_dimensions(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from dask_recommender_system_spark.operators.relational import IO_DIR
+    from dask_recommender_system_spark.data import IO_DIR
 
     q("sink_parquet_zorder", spark, sf_dir).count()  # force the write
     spans = {"user_id": [], "day_idx": []}
@@ -693,10 +693,10 @@ def test_compaction_reduces_file_count(spark, sf_dir):
     the physical layout is pinned here."""
     import glob
 
+    from dask_recommender_system_spark.data import IO_DIR
     from dask_recommender_system_spark.operators.relational import (
         COMPACT_SMALL_FILES,
         COMPACT_TARGET_FILES,
-        IO_DIR,
     )
 
     q("sink_compacted", spark, sf_dir).count()
@@ -712,8 +712,8 @@ def test_manifest_prune_skips_files(spark):
     Z-order layout separates the band into a file subset, so this runs at
     sf0.01 (at sf0.001's 15 users the band covers ~1/3 of the id range
     and every file overlaps — correct, but skip-free)."""
+    from dask_recommender_system_spark.data import IO_DIR
     from dask_recommender_system_spark.operators.relational import (
-        IO_DIR,
         MANIFEST_BAND,
         _manifest_prune,
         _write_zorder_layout,
@@ -1003,9 +1003,11 @@ def test_zstd_codec_actually_applies(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
+    from dask_recommender_system_spark.data import IO_DIR
+
     q("sink_parquet_zstd", spark, sf_dir).collect()
     for codec, expect in (("snappy", "SNAPPY"), ("zstd", "ZSTD")):
-        f = glob.glob(f"/tmp/drs_spark_io/nation_{codec}/part-*.parquet")[0]
+        f = glob.glob(f"{IO_DIR}/nation_{codec}/part-*.parquet")[0]
         meta = pq.ParquetFile(f).metadata.row_group(0).column(0)
         assert meta.compression == expect, (codec, meta.compression)
 
@@ -1018,12 +1020,13 @@ def test_sized_sink_respects_record_cap(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
+    from dask_recommender_system_spark.data import IO_DIR
     from dask_recommender_system_spark.operators.relational import (
         SIZED_MAX_RECORDS,
     )
 
     q("sink_parquet_sized", spark, sf_dir).collect()
-    files = glob.glob("/tmp/drs_spark_io/orders_sized_parquet/part-*.parquet")
+    files = glob.glob(f"{IO_DIR}/orders_sized_parquet/part-*.parquet")
     assert len(files) > 2  # the cap split the 2 tasks' outputs
     for f in files:
         assert pq.ParquetFile(f).metadata.num_rows <= SIZED_MAX_RECORDS
@@ -3654,7 +3657,7 @@ def test_sink_jsonl_gzip_roundtrip(spark, sf_dir):
     integers end-to-end."""
     import glob
 
-    from dask_recommender_system_spark.operators.relational import IO_DIR
+    from dask_recommender_system_spark.data import IO_DIR
 
     first = {
         tuple(r) for r in q("sink_jsonl_gzip", spark, sf_dir).collect()

@@ -139,7 +139,7 @@ def test_stream_cdc_upsert_keeps_tombstones(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from dask_recommender_system_spark.operators.relational import IO_DIR
+    from dask_recommender_system_spark.data import IO_DIR
     from dask_recommender_system_spark.registry import REGISTRY
 
     out = REGISTRY["stream_cdc_upsert"].fn(spark, sf_dir)

@@ -14,13 +14,13 @@ from pyspark.sql import functions as F
 def item_cf_similarity_r08(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r08 form: degrees attached via TWO post-agg joins of `cnt` (capped
     feeds lists AND cnt — a diamond whose subtree replays under count())."""
+    from dask_recommender_system_spark.data import ratings_cached
     from dask_recommender_system_spark.operators.windows import (
         CF_TOP_NEIGHBORS,
         CF_USER_CAP,
-        _ratings_view,
     )
 
-    r = _ratings_view(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     dedup = r.groupBy("user_id", "item_id").agg(
         F.max(F.unix_timestamp("ts")).alias("t"),
         F.max("interaction_id").alias("tie"),
